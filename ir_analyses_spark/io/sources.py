@@ -21,6 +21,7 @@ from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..ops.helpers import _parse_bytes
 from ..schemas import EVENTS_TS_NANOS_SCHEMA, RAW_FILING_SCHEMA, TESTDATA_SCHEMAS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -180,23 +181,6 @@ def sniff_encoding(path: str, sample_bytes: int = 64 * 1024) -> str:
         return "CP932"  # Shift-JIS superset used by Japanese filings
 
 
-_SIZE_UNITS = {"b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40,
-               "p": 1 << 50}
-
-
-def _parse_bytes(raw: str) -> int:
-    """Spark byte-string forms ("134217728b", "128m", "128MB") as an int;
-    unparseable degrades to 0 (callers treat 0 as 'assume splittable')."""
-    s = str(raw).strip().lower()
-    num = s.rstrip("kmgtpib")
-    suffix = s[len(num):].lstrip("i")  # "mb"→"m" handled below, "mib"→"m"
-    try:
-        value = int(num)
-    except ValueError:
-        return 0
-    return value * _SIZE_UNITS.get(suffix[:1] or "b", 1)
-
-
 def _no_split_limit(spark: SparkSession) -> int:
     """The size at or below which a file can NEVER be split by the scan.
 
@@ -210,13 +194,14 @@ def _no_split_limit(spark: SparkSession) -> int:
     — use THAT as the no-split threshold for the within-filing row-order
     contract, never maxPartitionBytes alone. Unparseable confs degrade to
     0, routing every file through the order-safe non-splittable path."""
-    mpb = _parse_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    )
-    open_cost = _parse_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4194304b")
-    )
-    return min(mpb, open_cost)
+    get = spark.conf.get
+    try:
+        return min(
+            _parse_bytes(get("spark.sql.files.maxPartitionBytes", "134217728b")),
+            _parse_bytes(get("spark.sql.files.openCostInBytes", "4194304b")),
+        )
+    except ValueError:
+        return 0
 
 
 def read_filing_csvs(

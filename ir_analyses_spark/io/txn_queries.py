@@ -7,16 +7,20 @@ oracle gate, the same treatment every other operator gets.
 
 Each run builds its table under a fresh ``tempfile.mkdtemp`` directory; the
 files must outlive the function (the driver collects the returned DataFrame
-afterwards), so cleanup is left to /tmp hygiene.
+afterwards), so cleanup is left to /tmp hygiene — except ``stream_txn_sink``,
+which materializes its result and removes its staging, table and checkpoint.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..ops.helpers import dsum, local_df
+from ..streaming.pipeline import run_available_now
 from . import txn
 from .sources import load_table
 
@@ -427,38 +431,35 @@ def stream_txn_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .txn_stream import TxnTableStreamDataSource
 
     spark.dataSource.register(TxnTableStreamDataSource)
-    src = tempfile.mkdtemp(prefix="stream_txn_src_")
-    table = tempfile.mkdtemp(prefix="stream_txn_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="stream_txn_ckpt_")
-    base = _orders(spark, sf_dir).filter(F.col("o_orderkey") % 4 == 1).select(
-        "o_orderkey",
-        F.substring("o_orderpriority", 1, 1).alias("prio"),
-        F.col("o_totalprice").cast("double").alias("price"),
-    )
-    base.repartition(3).write.mode("overwrite").parquet(src)
-    q = (
-        spark.readStream.schema("o_orderkey long, prio string, price double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.format("txn_table")
-        .option("path", table)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("txn stream sink did not finish in 300s")
-    hist = txn.history(table)
-    if any(h["operation"] != "stream_append" for h in hist):
-        raise RuntimeError(f"unexpected operations in history: {hist}")
-    rows = txn.read(spark, table)
-    return rows.groupBy("prio").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        dsum("price", scale=2).alias("total_price"),
-    ).crossJoin(
-        F.broadcast(local_df(spark, [(len(hist),)], "n_epochs INT"))
-    )
+    tmp = tempfile.mkdtemp(prefix="stream_txn_")
+    src, table = os.path.join(tmp, "src"), os.path.join(tmp, "table")
+    try:
+        base = _orders(spark, sf_dir).filter(F.col("o_orderkey") % 4 == 1).select(
+            "o_orderkey",
+            F.substring("o_orderpriority", 1, 1).alias("prio"),
+            F.col("o_totalprice").cast("double").alias("price"),
+        )
+        base.repartition(3).write.parquet(src)
+        run_available_now(
+            spark.readStream.schema("o_orderkey long, prio string, price double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .writeStream.format("txn_table")
+            .option("path", table),
+            staged=(src,),
+        )
+        hist = txn.history(table)
+        if any(h["operation"] != "stream_append" for h in hist):
+            raise RuntimeError(f"unexpected operations in history: {hist}")
+        rows = txn.read(spark, table)
+        return rows.groupBy("prio").agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            dsum("price", scale=2).alias("total_price"),
+        ).crossJoin(
+            F.broadcast(local_df(spark, [(len(hist),)], "n_epochs INT"))
+        ).localCheckpoint(eager=True)  # materialize before the table goes
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAM_TXN_SINK_SQL = """

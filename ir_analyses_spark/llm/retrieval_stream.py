@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..io.sources import load_table
 from ..ops.helpers import local_df
+from ..streaming.pipeline import run_available_now
 from .retrieval import append_retrieval_index, read_retrieval_index
 
 
@@ -68,32 +69,29 @@ def stream_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch count): a double-applied epoch would double every touched
     doc's tf, a torn commit would drop rows — either breaks the
     hash."""
+    import shutil
+
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    src = tempfile.mkdtemp(prefix="stream_ridx_src_")
-    idx = os.path.join(tempfile.mkdtemp(prefix="stream_ridx_"), "index")
-    ckpt = tempfile.mkdtemp(prefix="stream_ridx_ckpt_")
-    docs.repartition(3).write.mode("overwrite").parquet(src)
-    q = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(index_stream_sink(idx, seg_width=256))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("index stream sink did not finish in 300s")
-    postings, _, _meta = read_retrieval_index(spark, idx)
-    n_epochs = len(os.listdir(os.path.join(idx, "_applied")))
-    return postings.select(
-        "token", "segment", "df_seg", "total_tf", "postings"
-    ).crossJoin(
-        F.broadcast(
-            local_df(spark, [(n_epochs,)], "n_epochs int")
+    tmp = tempfile.mkdtemp(prefix="stream_ridx_")
+    src, idx = os.path.join(tmp, "src"), os.path.join(tmp, "index")
+    try:
+        docs.repartition(3).write.parquet(src)
+        run_available_now(
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .writeStream.foreachBatch(index_stream_sink(idx, seg_width=256)),
+            staged=(src,),
         )
-    )
+        postings, _, _meta = read_retrieval_index(spark, idx)
+        n_epochs = len(os.listdir(os.path.join(idx, "_applied")))
+        return postings.select(
+            "token", "segment", "df_seg", "total_tf", "postings"
+        ).crossJoin(
+            F.broadcast(local_df(spark, [(n_epochs,)], "n_epochs int"))
+        ).localCheckpoint(eager=True)  # materialize before the index goes
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # the batch certificate's oracle (INVERTED_INDEX_POSTINGS_SHARDED_SQL,

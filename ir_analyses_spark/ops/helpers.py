@@ -14,6 +14,9 @@ double columns.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 
@@ -77,47 +80,79 @@ def spread_narrow(df: DataFrame, approx_input_bytes: int | None = None) -> DataF
 
     Gate cost matters: ``df.rdd.getNumPartitions()`` (the dedup module's
     gate) re-plans the query and measured ~0.1 s per call — most of the
-    win. When the caller knows the input's on-disk size it passes
-    ``approx_input_bytes`` and the split count is estimated Python-side
-    (mirroring ``FilePartition.maxSplitBytes``: split size =
-    min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism))) for a
-    ~0-cost gate; the RDD-based gate stays as the fallback.
+    win. When the caller knows the input's on-disk size
+    (:func:`input_bytes`) it passes ``approx_input_bytes`` and the split
+    count is estimated Python-side (:func:`estimated_splits`) for a ~0-cost
+    gate; the RDD-based gate stays as the fallback.
     """
-    sc = df.sparkSession.sparkContext
-    par = sc.defaultParallelism
-    narrow: bool | None = None
-    if approx_input_bytes is not None:
-        try:
-            conf = df.sparkSession.conf
-            max_pb = _parse_bytes(
-                conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-            )
-            open_cost = _parse_bytes(
-                conf.get("spark.sql.files.openCostInBytes", str(4 << 20))
-            )
-            split = min(max_pb, max(open_cost, approx_input_bytes // max(par, 1)))
-            n_splits = max(1, -(-approx_input_bytes // max(split, 1)))
-            narrow = n_splits < par
-        except (TypeError, ValueError):
-            narrow = None  # unparsable deployment conf → RDD gate below
-    if narrow is None:
-        narrow = df.rdd.getNumPartitions() < par
+    spark = df.sparkSession
+    n_splits = (
+        None if approx_input_bytes is None
+        else estimated_splits(spark, approx_input_bytes)
+    )
+    if n_splits is None:  # no size evidence or unparsable conf → RDD gate
+        n_splits = df.rdd.getNumPartitions()
+    narrow = n_splits < spark.sparkContext.defaultParallelism
     return df.hint("REBALANCE") if narrow else df
 
 
-_BYTE_SUFFIX = {
-    "b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20, "mb": 1 << 20,
-    "g": 1 << 30, "gb": 1 << 30, "t": 1 << 40, "tb": 1 << 40,
-}
+def input_bytes(path: str) -> int | None:
+    """On-disk bytes of a parquet input — the ~0-cost evidence for the
+    split-count gates. A directory (a Spark-written table, a staged stream
+    source) sums its ``*.parquet`` files, following symlinks and skipping
+    ``_``/``.``-hidden subdirectories as Spark does; a file is its size; a
+    remote URI or a missing path is None. Never a directory's own
+    ``getsize``: its ~4 KB inode size makes any table look narrow and
+    inverts a gate's no-op-at-scale contract."""
+    if "://" in path:
+        return None
+    try:
+        if os.path.isfile(path):
+            return os.path.getsize(path)
+        if not os.path.isdir(path):
+            return None
+        total = 0
+        for root, dirs, files in os.walk(path, followlinks=True):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            total += sum(
+                os.path.getsize(os.path.join(root, f))
+                for f in files
+                if f.endswith(".parquet")
+            )
+        return total
+    except OSError:
+        return None
+
+
+def estimated_splits(spark, nbytes: int) -> int | None:
+    """The number of splits a file scan of ``nbytes`` plans, mirroring
+    ``FilePartition.maxSplitBytes``: split size = min(maxPartitionBytes,
+    max(openCostInBytes, bytes / defaultParallelism)). None when either
+    conf is unparsable."""
+    get = spark.conf.get
+    try:
+        max_pb = _parse_bytes(get("spark.sql.files.maxPartitionBytes", "128m"))
+        open_cost = _parse_bytes(get("spark.sql.files.openCostInBytes", "4m"))
+    except ValueError:
+        return None
+    par = max(spark.sparkContext.defaultParallelism, 1)
+    split = min(max_pb, max(open_cost, nbytes // par))
+    return max(1, -(-nbytes // max(split, 1)))
+
+
+_BYTE_SIZE = re.compile(r"(\d+(?:\.\d+)?)\s*([kmgtp]?)i?b?")
+_BYTE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
 
 
 def _parse_bytes(v: str) -> int:
-    """Spark size-conf string → bytes ('134217728', '128m', '1g', ...)."""
-    s = str(v).strip().lower()
-    for suf in sorted(_BYTE_SUFFIX, key=len, reverse=True):
-        if s.endswith(suf):
-            return int(float(s[: -len(suf)]) * _BYTE_SUFFIX[suf])
-    return int(s)
+    """Spark size-conf string → bytes, binary units as Spark reads them:
+    '134217728', '134217728b', '128m', '128MB', '128mib', '1.5g', '1p'.
+    Raises ValueError on anything else."""
+    m = _BYTE_SIZE.fullmatch(str(v).strip().lower())
+    if m is None:
+        raise ValueError(f"not a byte size: {v!r}")
+    num, shift = m.group(1), _BYTE_SHIFT[m.group(2)]
+    return int(float(num) * (1 << shift)) if "." in num else int(num) << shift
 
 
 def _c(col: Column | str) -> Column:

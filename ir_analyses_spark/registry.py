@@ -177,9 +177,10 @@ _MODULES = [
 #:   curation_funnel_counts (one-pass conditional-aggregate counts),
 #:   dsir_importance_select + dsir_gate_docs (single explode pass),
 #:   dedup_components + neardup_dedup_pipeline (try/finally unpersist),
-#:   ewma_forecast (shared fold SQL), the five _run_to_table streaming
+#:   ewma_forecast (shared fold SQL), the four memory-sink streaming
 #:   rows + stream_incremental_rollup (changelog checkpointing +
-#:   input-sized state partitions), and url_canonicalize /
+#:   input-sized state partitions, all now started by
+#:   streaming.pipeline.run_available_now), and url_canonicalize /
 #:   url_domain_caps (blocked_domain_pred factoring in llm/url_ops).
 #:   html_extract_text / quality gates / linedup rows were NOT pulled
 #:   (their operators are unchanged; the funnel one-pass only ADDS a

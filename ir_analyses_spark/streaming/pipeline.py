@@ -8,6 +8,10 @@ Design notes for scale:
 - the same transformation functions run in batch mode (DataFrames are
   source-agnostic) — the registry exposes batch twins of each windowed agg,
   which is also how the DuckDB oracle can check streaming semantics;
+- every stream the engine runs — memory sink, foreachBatch sink, the
+  ``txn_table`` sink — starts through :func:`run_available_now`: one
+  availableNow trigger, one timeout, one checkpoint/staging cleanup and
+  one state-sizing policy derived from the staged input's bytes;
 - sinks go through ``foreachBatch`` + idempotent MERGE so replays after
   failure don't duplicate (exactly-once at the table level for keyed
   MERGE; the ADDITIVE rollup and SCD2 sinks commit each batch's applied
@@ -19,10 +23,13 @@ Design notes for scale:
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..io.sources import events_ts_unit, load_table, narrow_ns_to_ts
 from ..schemas import EVENTS_TS_NANOS_SCHEMA, TESTDATA_SCHEMAS
@@ -159,29 +166,82 @@ def dedup_within_watermark(events: DataFrame) -> DataFrame:
 # Sinks
 # ---------------------------------------------------------------------------
 
-def run_stream_to_memory(
-    df: DataFrame, name: str, mode: str = "append"
-) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
-    """Start the stream into an in-memory table (tests/dev)."""
-    return (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+#: upper bound for every availableNow stream — a wedged micro-batch must
+#: surface as an error row in the correctness sweep, not hang it forever
+_STREAM_TIMEOUT_S = 600
+
+#: serializes run_available_now's session-global set → run → restore
+_RUN_LOCK = threading.Lock()
 
 
-def _start_foreach_batch(df: DataFrame, target: str, apply_fn):
-    """Shared starter for the foreachBatch sinks: checkpoint beside the
-    target, availableNow trigger. One definition so trigger/checkpoint
-    policy can't drift between the four sink wrappers."""
-    return (
-        df.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", f"{target}__checkpoint")
-        .trigger(availableNow=True)
-        .start()
-    )
+def run_available_now(
+    writer: DataStreamWriter,
+    staged: tuple[str, ...] = (),
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Run a configured stream to completion and return the terminated
+    query — the one place the engine starts and awaits a stream.
+
+    ``writer`` carries the caller's sink, query name, output mode and
+    options; this adds the ``availableNow`` trigger and the checkpoint (a
+    temp dir deleted afterwards, unless the caller passes its own — the
+    foreachBatch sinks keep ``<target>__checkpoint`` so a restart
+    resumes). ``staged`` are the caller's staged source directories,
+    deleted afterwards too. A failed batch raises the stream's exception;
+    a stream still running after ``_STREAM_TIMEOUT_S`` is stopped and
+    raises RuntimeError.
+
+    State sizing (derive partitioning from input size, never a constant):
+    a stateful operator opens one state-store instance per shuffle
+    partition, each paying a per-batch commit — measured (sf0.01) 32
+    RocksDB commits of ~1.5 s each for the interval join's 3,987-row
+    state, 4.80 → 2.74 s sized. So ``spark.sql.shuffle.partitions`` is
+    lowered for the run to the staged bytes' estimated split count (floor
+    2: state stays multi-instance) when that is below the session's
+    value; at real scale it is not, and this is a no-op. The count is
+    locked into the fresh checkpoint at batch 0; output values are
+    partitioning-independent.
+
+    Serial contract: the stream runs on the caller's session (a child
+    ``newSession()`` would hide the memory sink's table and the stream's
+    progress events from the caller), so the lowered count is visible to
+    other work planned on that session meanwhile. Runs serialize on a
+    module lock, so two runners never interleave their set/restore; do
+    not plan other work on the session from another thread during a run.
+    """
+    from ..ops.helpers import estimated_splits, input_bytes
+
+    spark = writer._spark  # the session of the writer's DataFrame
+    cleanup = list(staged)
+    with _RUN_LOCK:
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        nbytes = sum(input_bytes(d) or 0 for d in staged)
+        splits = estimated_splits(spark, nbytes) if nbytes > 0 else None
+        parts = max(2, splits or 0)
+        sized = splits is not None and old.isdigit() and parts < int(old)
+        try:
+            if checkpoint is None:
+                checkpoint = tempfile.mkdtemp(prefix="ir_spark_ckpt_")
+                cleanup.append(checkpoint)
+            if sized:
+                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            q = (
+                writer.option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            if not q.awaitTermination(_STREAM_TIMEOUT_S):
+                q.stop()
+                raise RuntimeError(
+                    f"stream {q.name or q.id} did not finish in "
+                    f"{_STREAM_TIMEOUT_S}s"
+                )
+        finally:
+            if sized:
+                spark.conf.set("spark.sql.shuffle.partitions", old)
+            for d in cleanup:
+                shutil.rmtree(d, ignore_errors=True)
+    return q
 
 
 def foreach_batch_upsert(
@@ -208,7 +268,10 @@ def foreach_batch_upsert(
             partition_col=partition_col,
         )
 
-    return _start_foreach_batch(df, target_dir, _apply)
+    return run_available_now(
+        df.writeStream.foreachBatch(_apply),
+        checkpoint=f"{target_dir}__checkpoint",
+    )
 
 
 def foreach_batch_scd2(
@@ -253,7 +316,10 @@ def foreach_batch_scd2(
             batch_id=batch_id,
         )
 
-    return _start_foreach_batch(df, target_dir, _apply)
+    return run_available_now(
+        df.writeStream.foreachBatch(_apply),
+        checkpoint=f"{target_dir}__checkpoint",
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -292,6 +358,14 @@ def foreach_batch_rollup(df: DataFrame, target_dir: str):
     day it already committed, crash-anywhere included — the transactionless
     equivalent of Delta recording the txn id inside the commit. The
     rewrite stays pruned to the days the batch touches, never O(table)."""
+    return run_available_now(
+        df.writeStream.foreachBatch(_rollup_batch(target_dir)),
+        checkpoint=f"{target_dir}__checkpoint",
+    )
+
+
+def _rollup_batch(target_dir: str):
+    """foreachBatch function of :func:`foreach_batch_rollup`."""
     from ..io.sinks import additive_merge_committed
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -304,7 +378,7 @@ def foreach_batch_rollup(df: DataFrame, target_dir: str):
             batch_id=batch_id,
         )
 
-    return _start_foreach_batch(df, target_dir, _apply)
+    return _apply
 
 
 def foreach_batch_rollup_txn(df: DataFrame, table: str):
@@ -328,7 +402,9 @@ def foreach_batch_rollup_txn(df: DataFrame, table: str):
             batch_id=batch_id,
         )
 
-    return _start_foreach_batch(df, table, _apply)
+    return run_available_now(
+        df.writeStream.foreachBatch(_apply), checkpoint=f"{table}__checkpoint"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -516,110 +592,6 @@ def _stage_events_dir(sf_dir: str) -> str:
     return d
 
 
-#: upper bound for driver-executed availableNow streams — a wedged
-#: micro-batch must surface as an error row in the correctness sweep, not
-#: hang the whole sweep forever
-_STREAM_TIMEOUT_S = 600
-
-
-def _stream_state_partitions(
-    spark: SparkSession, src_dirs: tuple[str, ...]
-) -> int | None:
-    """Scale-adaptive shuffle-partition count for a stateful certificate
-    stream (guide §2: derive partitioning from input size, never a
-    constant; VERDICT r14 item 3).
-
-    A stateful operator opens shuffle-partitions × (stores-per-operator)
-    state-store instances, and EVERY instance pays a per-batch
-    open/commit — measured (r15 attribution, sf0.01): the stream-stream
-    interval join's wall was dominated by 32 RocksDB instance commits of
-    ~1.5 s each for a 3,987-row total state. Deriving the partition
-    count from the staged input's on-disk size (the same
-    ``FilePartition.maxSplitBytes`` mirror as ``ops.helpers.spread_narrow``)
-    sizes the state machinery to the data: measured 4.80 → 2.74 s
-    (with changelog checkpointing on top, 2.48 s; identical rows). At
-    real scale the estimate is ≥ the session's setting and this returns
-    None — a no-op, so it is not a local-only tuning. A floor of 2 keeps
-    every run exercising genuinely multi-instance state."""
-    from ..ops.helpers import _parse_bytes
-
-    try:
-        sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return None  # exotic deployment value ("auto") → leave untouched
-    total = 0
-    for d in src_dirs:
-        for root, _dirs, files in os.walk(d, followlinks=True):
-            for f in files:
-                if f.endswith(".parquet"):
-                    try:
-                        total += os.path.getsize(os.path.join(root, f))
-                    except OSError:
-                        return None
-    if total <= 0:
-        return None
-    try:
-        max_pb = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20))
-        )
-        open_cost = _parse_bytes(
-            spark.conf.get("spark.sql.files.openCostInBytes", str(4 << 20))
-        )
-    except (TypeError, ValueError):
-        return None
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    split = min(max_pb, max(open_cost, total // par))
-    n_splits = max(1, -(-total // max(split, 1)))
-    proposed = max(2, n_splits)
-    return proposed if proposed < sess else None
-
-
-def _run_to_table(
-    df: DataFrame, mode: str, cleanup_dirs: tuple[str, ...] = ()
-) -> DataFrame:
-    """Run an availableNow stream into a memory sink and return the final
-    table. The sink holds the rows in the session, so the checkpoint and
-    any caller-staged source directories are deleted afterwards — repeated
-    sweeps must not accumulate temp state.
-
-    ``cleanup_dirs`` are the caller's STAGED SOURCE directories (that is
-    what every caller passes); they double as the input-size evidence for
-    the scale-adaptive state-partition count, applied for the duration of
-    the stream and restored after (partition count is locked into the
-    fresh checkpoint at batch 0, so the restore cannot race later
-    batches). Output values are partitioning-independent; the memory
-    sink's row order is not part of any oracle compare."""
-    import shutil
-
-    name = "strq_" + uuid.uuid4().hex[:10]
-    ckpt = tempfile.mkdtemp(prefix="ir_spark_ckpt_")
-    spark = df.sparkSession
-    sp = _stream_state_partitions(spark, cleanup_dirs)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions") if sp else None
-    if sp:
-        spark.conf.set("spark.sql.shuffle.partitions", str(sp))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(_STREAM_TIMEOUT_S):
-            q.stop()
-            raise RuntimeError(
-                f"streaming query {name} did not finish in {_STREAM_TIMEOUT_S}s"
-            )
-    finally:
-        if sp:
-            spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        for d in (ckpt, *cleanup_dirs):
-            shutil.rmtree(d, ignore_errors=True)
-    return df.sparkSession.table(name)
-
-
 def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Executes the custom-keyed-state operator (§2B custom stateful) as a
     real stream over the events parquet and returns final per-user totals.
@@ -627,11 +599,17 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the final state; micros→value division by 1e6 is exact for integer
     micros < 2^53, so the double compares cleanly cross-engine."""
     src = _stage_events_dir(sf_dir)
-    events = stream_events(spark, src)
-    out = _run_to_table(stateful_totals_micros(events), "update", (src,))
+    q = run_available_now(
+        stateful_totals_micros(stream_events(spark, src))
+        .writeStream.format("memory")
+        .queryName(f"strq_{uuid.uuid4().hex[:10]}")
+        .outputMode("update"),
+        staged=(src,),
+    )
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        out.withColumn("rn", F.row_number().over(w))
+        spark.table(q.name)
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
             "user_id",
@@ -667,9 +645,13 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator is exactly "each key admitted once". Payload-level survivor
     behavior is exercised in tests/test_streaming.py."""
     src = _stage_events_dir(sf_dir)
-    events = stream_events(spark, src)
-    out = _run_to_table(dedup_within_watermark(events), "append", (src,))
-    return out.select("event_id")
+    q = run_available_now(
+        dedup_within_watermark(stream_events(spark, src))
+        .writeStream.format("memory")
+        .queryName(f"strq_{uuid.uuid4().hex[:10]}"),
+        staged=(src,),
+    )
+    return spark.table(q.name).select("event_id")
 
 
 STREAM_DEDUP_SQL = """
@@ -691,7 +673,12 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = events.join(
         F.broadcast(nation), events["user_id"] % 25 == nation["n_nationkey"]
     ).select("event_id", "user_id", "n_name", "event_type", "value")
-    return _run_to_table(enriched, "append", (src,))
+    q = run_available_now(
+        enriched.writeStream.format("memory")
+        .queryName(f"strq_{uuid.uuid4().hex[:10]}"),
+        staged=(src,),
+    )
+    return spark.table(q.name)
 
 
 STREAM_STATIC_ENRICH_SQL = """
@@ -743,7 +730,12 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "micros_to_purchase"
         ),
     )
-    return _run_to_table(joined, "append", (src_c, src_p))
+    q = run_available_now(
+        joined.writeStream.format("memory")
+        .queryName(f"strq_{uuid.uuid4().hex[:10]}"),
+        staged=(src_c, src_p),
+    )
+    return spark.table(q.name)
 
 
 STREAM_STREAM_INTERVAL_JOIN_SQL = """
@@ -767,36 +759,26 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the one-shot batch aggregate — additivity means N incremental merges
     must equal the single full aggregation exactly (integer micros, no
     float drift)."""
-    import shutil
-
-    src = tempfile.mkdtemp(prefix="ir_spark_rollup_src_")
-    target = os.path.join(
-        tempfile.mkdtemp(prefix="ir_spark_rollup_tgt_"), "rollup"
-    )
+    tmp = tempfile.mkdtemp(prefix="ir_spark_rollup_")
+    src, target = os.path.join(tmp, "src"), os.path.join(tmp, "rollup")
     try:
         # split the source into 3 files so the staged dir looks like a
         # growing stream; load_table normalizes ts to TimestampType, so the
         # staged footers are MICROS regardless of the source's unit
-        raw = load_table(spark, "events", sf_dir)
-        raw.repartition(3).write.mode("overwrite").parquet(src)
-        q = foreach_batch_rollup(stream_events(spark, src), target)
-        if not q.awaitTermination(_STREAM_TIMEOUT_S):
-            q.stop()
-            raise RuntimeError(
-                f"rollup stream did not finish in {_STREAM_TIMEOUT_S}s"
-            )
+        load_table(spark, "events", sf_dir).repartition(3).write.parquet(src)
+        run_available_now(
+            stream_events(spark, src).writeStream.foreachBatch(
+                _rollup_batch(target)
+            ),
+            staged=(src,),
+        )
         out = spark.read.parquet(target).select(
             "day", "event_type", "n_events", "value_micros"
         )
-        # materialize before the temp dirs vanish
+        # materialize before the temp dir vanishes
         return out.localCheckpoint(eager=True)
     finally:
-        # the result is checkpointed above, so the staged source, the
-        # rollup table AND its stream checkpoint can all go - repeated
-        # sweeps must not accrete temp state
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(os.path.dirname(target), ignore_errors=True)
-        shutil.rmtree(f"{target}__checkpoint", ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAM_INCREMENTAL_ROLLUP_SQL = """

@@ -14,7 +14,7 @@ from ir_analyses_spark.streaming.curate_stream import (
     quality_gate,
     stream_documents,
 )
-from ir_analyses_spark.streaming.pipeline import run_stream_to_memory
+from ir_analyses_spark.streaming.pipeline import run_available_now
 
 GOOD = (
     "the quick brown fox jumps over the lazy dog and runs to the river "
@@ -49,16 +49,15 @@ def docs_dir(spark, tmp_path_factory):
     return path
 
 
-def _run(q, timeout=120):
-    assert q.awaitTermination(timeout), "stream did not finish in time"
+def _run(stream, name):
+    run_available_now(stream.writeStream.format("memory").queryName(name))
 
 
 def test_streaming_gate_matches_batch(spark, docs_dir):
     stream = quality_gate(
         stream_documents(spark, docs_dir), thresholds={"min_words": 10}
     )
-    q = run_stream_to_memory(stream, "t_gate", mode="append")
-    _run(q)
+    _run(stream, "t_gate")
     got = {r["doc_id"] for r in spark.table("t_gate").collect()}
     batch = quality_gate(
         spark.read.parquet(docs_dir), thresholds={"min_words": 10}
@@ -79,8 +78,7 @@ def test_streaming_curate_dedups_recrawl(spark, docs_dir):
     stream = curate_stream(
         stream_documents(spark, docs_dir), thresholds={"min_words": 10}
     )
-    q = run_stream_to_memory(stream, "t_curate", mode="append")
-    _run(q)
+    _run(stream, "t_curate")
     rows = spark.table("t_curate").collect()
     # 7 gate survivors, but docs 0 and 8 are byte-identical → 6 remain
     assert len(rows) == 6
@@ -115,10 +113,7 @@ def test_streaming_classifier_gate_matches_batch(spark, docs_dir):
     model = train_quality_classifier(pos, neg, n_features=1 << 12, max_iter=15)
     stream = classifier_gate(stream_documents(spark, docs_dir), model)
     assert stream.isStreaming
-    q = run_stream_to_memory(
-        stream.select("doc_id"), "t_clf_gate", mode="append"
-    )
-    _run(q)
+    _run(stream.select("doc_id"), "t_clf_gate")
     got = {r["doc_id"] for r in spark.table("t_clf_gate").collect()}
     batch = spark.read.schema(
         "doc_id long, text string, ingest_ts timestamp"

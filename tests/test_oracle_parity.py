@@ -5,6 +5,10 @@ Queries without an oracle entry are still executed (rows-only smoke)."""
 
 from __future__ import annotations
 
+import os
+import re
+import tempfile
+
 import pytest
 
 from ir_analyses_spark.registry import all_oracles, all_queries
@@ -115,8 +119,27 @@ def test_rows_only_schema_registry_in_sync():
     assert set(ROWS_ONLY_SCHEMAS) == set(QUERIES) - set(ORACLES)
 
 
+#: registry rows that run a real stream: staged sources, checkpoints and
+#: sink tables are theirs to delete, so repeated sweeps accrete nothing
+STREAM_CERTIFICATES = {
+    "stateful_user_totals",
+    "stream_dedup_watermark",
+    "stream_static_enrich",
+    "stream_stream_interval_join",
+    "stream_incremental_rollup",
+    "stream_index_append",
+    "stream_txn_sink",
+}
+
+#: what the JVM leaves in the temp dir ONCE per process on first use — the
+#: extracted snappy/lz4/RocksDB native libraries and the session's artifact
+#: directory — is not a run's residue
+_ONCE_PER_PROCESS = re.compile(r".*\.so(\.lck)?|artifacts-[0-9a-f-]+")
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, sf_dir, con):
+    before = set(os.listdir(tempfile.gettempdir()))
     df = QUERIES[name](spark, sf_dir)
     if name in ORACLES:
         assert_matches_oracle(df, con, ORACLES[name], name=name)
@@ -124,3 +147,9 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
         # rows-only: must execute AND keep its declared schema
         assert df.columns == ROWS_ONLY_SCHEMAS[name], name
         df.count()
+    if name in STREAM_CERTIFICATES:
+        residue = {
+            e for e in set(os.listdir(tempfile.gettempdir())) - before
+            if not _ONCE_PER_PROCESS.fullmatch(e)
+        }
+        assert not residue, (name, sorted(residue))

@@ -4,7 +4,11 @@ file sources, results checked against the identical batch transformation
 
 from __future__ import annotations
 
-import time
+import glob
+import json
+import os
+import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +17,7 @@ from ir_analyses_spark.io.sources import load_table
 from ir_analyses_spark.streaming.pipeline import (
     dedup_within_watermark,
     foreach_batch_upsert,
-    run_stream_to_memory,
+    run_available_now,
     session_windows,
     stateful_running_totals,
     stateful_totals_tws,
@@ -40,16 +44,15 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def _run(q, timeout=120):
-    assert q.awaitTermination(timeout), "stream did not finish in time"
+def _to_memory(stream, name, mode):
+    return stream.writeStream.format("memory").queryName(name).outputMode(mode)
 
 
 def test_tumbling_stream_matches_batch(spark, events_dir):
     # complete mode: append would hold back windows the watermark has not
     # passed yet (they'd emit on the next batch — correct but unending here)
     stream = tumbling_counts(stream_events(spark, events_dir))
-    q = run_stream_to_memory(stream, "t_tumbling", mode="complete")
-    _run(q)
+    run_available_now(_to_memory(stream, "t_tumbling", "complete"))
     got = _rows(spark.table("t_tumbling"))
     want = _rows(tumbling_counts(load_table(spark, "events", SF)))
     assert got == want
@@ -59,8 +62,7 @@ def test_sliding_stream_matches_batch(spark, events_dir):
     from ir_analyses_spark.streaming.pipeline import sliding_user_activity
 
     stream = sliding_user_activity(stream_events(spark, events_dir))
-    q = run_stream_to_memory(stream, "t_sliding", mode="complete")
-    _run(q)
+    run_available_now(_to_memory(stream, "t_sliding", "complete"))
     got = _rows(spark.table("t_sliding"))
     want = _rows(sliding_user_activity(load_table(spark, "events", SF)))
     assert got == want
@@ -72,8 +74,7 @@ def test_session_stream_matches_batch(spark, events_dir, tmp_path):
     one_dir = str(tmp_path / "one_file")
     spark.read.parquet(events_dir).coalesce(1).write.parquet(one_dir)
     stream = session_windows(stream_events(spark, one_dir))
-    q = run_stream_to_memory(stream, "t_sessions", mode="complete")
-    _run(q)
+    run_available_now(_to_memory(stream, "t_sessions", "complete"))
     got = _rows(spark.table("t_sessions"))
     want = _rows(session_windows(load_table(spark, "events", SF)))
     assert got == want
@@ -88,8 +89,7 @@ def test_dedup_within_watermark(spark, events_dir, tmp_path):
     raw = spark.read.parquet(events_dir)
     raw.unionByName(raw).coalesce(1).write.mode("overwrite").parquet(dup_dir)
     stream = dedup_within_watermark(stream_events(spark, dup_dir))
-    q = run_stream_to_memory(stream.select("event_id"), "t_dedup", mode="append")
-    _run(q)
+    run_available_now(_to_memory(stream.select("event_id"), "t_dedup", "append"))
     got = spark.table("t_dedup")
     n_distinct = load_table(spark, "events", SF).select("event_id").distinct().count()
     assert got.count() == n_distinct
@@ -134,8 +134,7 @@ def test_stateful_running_totals_twins(spark, events_dir, totals_fn, sink):
 
     assert ensure_protobuf(spark)  # ships the shim to workers if needed
     stream = totals_fn(stream_events(spark, events_dir))
-    q = run_stream_to_memory(stream, sink, mode="update")
-    _run(q)
+    run_available_now(_to_memory(stream, sink, "update"))
     # final state per user (last update wins) == batch aggregate
     final = (
         spark.table(sink)
@@ -180,10 +179,7 @@ def test_foreach_batch_scd2_versions_dimension(spark, events_dir, tmp_path):
         F.col("event_type").alias("state"),
         F.to_date("ts").alias("effective_from"),
     )
-    q = foreach_batch_scd2(
-        changes, target, key="user_id", change_cols=["state"]
-    )
-    _run(q)
+    foreach_batch_scd2(changes, target, key="user_id", change_cols=["state"])
     dim = spark.read.parquet(target)
     n_versions = dim.count()
     # exactly one current row per user
@@ -204,10 +200,7 @@ def test_foreach_batch_scd2_versions_dimension(spark, events_dir, tmp_path):
     import shutil
 
     shutil.rmtree(f"{target}__checkpoint")
-    q2 = foreach_batch_scd2(
-        changes, target, key="user_id", change_cols=["state"]
-    )
-    _run(q2)
+    foreach_batch_scd2(changes, target, key="user_id", change_cols=["state"])
     assert spark.read.parquet(target).count() == n_versions
 
 
@@ -221,8 +214,7 @@ def test_incremental_rollup_additive_and_replay_safe(spark, events_dir, tmp_path
     )
 
     target = str(tmp_path / "rollup")
-    q = foreach_batch_rollup(stream_events(spark, events_dir), target)
-    _run(q)
+    foreach_batch_rollup(stream_events(spark, events_dir), target)
     got = _rows(
         spark.read.parquet(target).select(
             "day", "event_type", "n_events", "value_micros"
@@ -237,8 +229,7 @@ def test_incremental_rollup_additive_and_replay_safe(spark, events_dir, tmp_path
     import shutil
 
     shutil.rmtree(f"{target}__checkpoint")
-    q2 = foreach_batch_rollup(stream_events(spark, events_dir), target)
-    _run(q2)
+    foreach_batch_rollup(stream_events(spark, events_dir), target)
     assert (
         _rows(
             spark.read.parquet(target).select(
@@ -266,7 +257,7 @@ def test_incremental_rollup_txn_snapshot_and_replay_safe(
     )
 
     table = str(tmp_path / "rollup_txn")
-    _run(foreach_batch_rollup_txn(stream_events(spark, events_dir), table))
+    foreach_batch_rollup_txn(stream_events(spark, events_dir), table)
     cols = ["day", "event_type", "n_events", "value_micros"]
     events = load_table(spark, "events", SF)
     want = _rows(rollup_delta(events).select(*cols))
@@ -277,7 +268,7 @@ def test_incremental_rollup_txn_snapshot_and_replay_safe(
     import shutil
 
     shutil.rmtree(f"{table}__checkpoint")
-    _run(foreach_batch_rollup_txn(stream_events(spark, events_dir), table))
+    foreach_batch_rollup_txn(stream_events(spark, events_dir), table)
     assert txn.snapshot(table).version == v  # not one partial commit
     assert _rows(txn.read(spark, table).select(*cols)) == want
     assert _rows(pinned.select(*cols)) == want
@@ -288,8 +279,7 @@ def test_foreach_batch_upsert_idempotent(spark, events_dir, tmp_path):
     stream = stream_events(spark, events_dir).select(
         "event_id", "user_id", "event_type", "value"
     )
-    q = foreach_batch_upsert(stream, target, keys=["event_id"])
-    _run(q)
+    foreach_batch_upsert(stream, target, keys=["event_id"])
     first = spark.read.parquet(target)
     n = first.count()
     assert n == load_table(spark, "events", SF).count()
@@ -297,35 +287,103 @@ def test_foreach_batch_upsert_idempotent(spark, events_dir, tmp_path):
     import shutil
 
     shutil.rmtree(f"{target}__checkpoint")
-    q2 = foreach_batch_upsert(stream, target, keys=["event_id"])
-    _run(q2)
+    foreach_batch_upsert(stream, target, keys=["event_id"])
     assert spark.read.parquet(target).count() == n
 
 
-def test_stream_state_partitions_gate(spark, sf_dir, tmp_path):
-    """r15 scale-adaptive state sizing: a dimension-sized staged source
-    proposes a small partition count (floor 2); when the session is
-    already at or below the proposal the gate is a no-op (None) — the
-    at-scale behavior, where the estimate meets defaultParallelism."""
-    from ir_analyses_spark.streaming.pipeline import (
-        _stage_events_dir,
-        _stream_state_partitions,
+def _ckpt_partitions(ckpt: str) -> str:
+    """The shuffle-partition count a stream locked into its checkpoint at
+    batch 0 (offset log line 2 carries the batch's conf)."""
+    with open(os.path.join(ckpt, "offsets", "0")) as f:
+        meta = json.loads(f.read().splitlines()[1])
+    return meta["conf"]["spark.sql.shuffle.partitions"]
+
+
+def _dedup_writer(spark, src):
+    return _to_memory(
+        dedup_within_watermark(stream_events(spark, src)).select("event_id"),
+        f"t_sized_{uuid.uuid4().hex[:8]}",
+        "append",
     )
 
-    src = _stage_events_dir(sf_dir)
-    try:
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        got = _stream_state_partitions(spark, (src,))
-        # the sf0.001/sf0.01 events table is far below one split per core
-        assert got == 2
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "2")
-            assert _stream_state_partitions(spark, (src,)) is None
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-        # empty source dir → no evidence → no-op
-        assert _stream_state_partitions(spark, (str(tmp_path),)) is None
-    finally:
-        import shutil
 
-        shutil.rmtree(src, ignore_errors=True)
+def _foreach_batch_writer(spark, src):
+    return stream_events(spark, src).writeStream.foreachBatch(
+        lambda batch_df, batch_id: None
+    )
+
+
+def test_stream_state_partitions_gate(spark, sf_dir, events_dir, tmp_path):
+    """Scale-adaptive state sizing in run_available_now, one policy for
+    every sink: a dimension-sized staged source lowers a memory-sink and a
+    foreachBatch stream alike (floor 2); when the session is already at or
+    below the proposal the gate is a no-op — the at-scale behavior, where
+    the estimate meets defaultParallelism; a staged dir with no parquet
+    bytes is no evidence, also a no-op. The session's own count is
+    restored, and the staged source deleted, after every run."""
+    from ir_analyses_spark.ops.helpers import estimated_splits, input_bytes
+    from ir_analyses_spark.streaming.pipeline import _stage_events_dir
+
+    sess = spark.conf.get("spark.sql.shuffle.partitions")
+    for sink, writer in (("mem", _dedup_writer), ("fb", _foreach_batch_writer)):
+        src = _stage_events_dir(sf_dir)
+        # the sf0.001/sf0.01 events table is far below one split per core
+        assert estimated_splits(spark, input_bytes(src)) == 1
+        ckpt = str(tmp_path / sink)
+        run_available_now(writer(spark, src), staged=(src,), checkpoint=ckpt)
+        assert _ckpt_partitions(ckpt) == "2", sink
+        assert spark.conf.get("spark.sql.shuffle.partitions") == sess
+        assert not os.path.exists(src)
+    for low in ("2", "1"):
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", low)
+            src = _stage_events_dir(sf_dir)
+            ckpt = str(tmp_path / f"low{low}")
+            run_available_now(
+                _dedup_writer(spark, src), staged=(src,), checkpoint=ckpt
+            )
+            assert _ckpt_partitions(ckpt) == low
+            assert spark.conf.get("spark.sql.shuffle.partitions") == low
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", sess)
+    # empty staged dir → no evidence → the stream runs at the session count
+    empty = str(tmp_path / "empty")
+    os.mkdir(empty)
+    assert input_bytes(empty) == 0
+    run_available_now(
+        _dedup_writer(spark, events_dir),
+        staged=(empty,),
+        checkpoint=str(tmp_path / "c"),
+    )
+    assert _ckpt_partitions(str(tmp_path / "c")) == sess
+
+
+def test_runner_restores_and_cleans_up_after_failed_batch(spark, sf_dir):
+    """A raising foreachBatch function surfaces as the stream's exception,
+    after the runner restored the session's partition count (lowered while
+    the batch ran) and deleted the staged source and its own checkpoint."""
+    from pyspark.errors import StreamingQueryException
+
+    from ir_analyses_spark.streaming.pipeline import _stage_events_dir
+
+    seen = []
+
+    def boom(batch_df, batch_id):
+        seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+        raise RuntimeError("boom in foreachBatch")
+
+    def ckpts():
+        return set(glob.glob(os.path.join(tempfile.gettempdir(), "ir_spark_ckpt_*")))
+
+    sess = spark.conf.get("spark.sql.shuffle.partitions")
+    before = ckpts()
+    src = _stage_events_dir(sf_dir)
+    with pytest.raises(StreamingQueryException, match="boom in foreachBatch"):
+        run_available_now(
+            stream_events(spark, src).writeStream.foreachBatch(boom),
+            staged=(src,),
+        )
+    assert seen == ["2"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == sess
+    assert not os.path.exists(src)
+    assert ckpts() == before
