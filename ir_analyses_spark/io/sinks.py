@@ -5,8 +5,12 @@ The reference upserts row-at-a-time through an ORM session (reference
 utils/repositories/base_repository.py:54-58); the engine's write unit is a
 whole DataFrame. With Delta/Iceberg available these helpers become
 ``MERGE INTO`` / ``replaceWhere`` one-liners; on bare parquet the same
-semantics are anti-join + union + staged atomic swap. All upserts key on
-*natural* keys (SURVEY §7.3.2) so reloads are idempotent.
+semantics are anti-join + union + staged directory swap (``_swap_in``).
+All upserts key on *natural* keys (SURVEY §7.3.2) so reloads are
+idempotent. Writes that are NOT idempotent under replay — the additive
+rollup and the SCD2 dimension fed by streaming sinks — need an
+applied-batch ledger committed with the data; they go through the
+transaction-log format in ``io/txn.py`` instead.
 """
 
 from __future__ import annotations
@@ -131,196 +135,6 @@ def merge_upsert(
     _swap_in(staging, target_dir)
 
 
-def batch_ledger(target_dir: str, batch_id) -> tuple[bool, "Callable[[], None]"]:
-    """Applied-batch ledger for non-idempotent (additive / versioning)
-    foreachBatch sinks: returns (already_applied, mark_applied).
-
-    The ledger lives INSIDE the table directory (``<target>/_applied/<id>``
-    — underscore-prefixed, so parquet scans never see it). That placement
-    is the point: a sink that commits through a staged swap writes the
-    marker into the STAGING directory before the swap, so marker and data
-    are promoted by the SAME rename — there is no between-merge-and-mark
-    crash window (the poor-man's manifest commit; Delta's txn version does
-    this inside its log). ``scd2_merge(batch_id=...)`` and
-    ``additive_merge_committed`` both commit that way; ``mark_applied``
-    (tmp+rename, so a torn marker can never silently skip an unapplied
-    batch) remains for callers without a staged swap, which do retain the
-    classic two-phase gap."""
-    import os as _os
-
-    ledger = _os.path.join(target_dir, "_applied")
-    marker = _os.path.join(ledger, str(batch_id))
-    # tables written before the ledger moved inside the table directory
-    # kept markers at the sibling <target>__applied — honor them so an
-    # upgraded deployment doesn't re-apply every historical batch
-    legacy = _os.path.join(
-        target_dir.rstrip("/") + "__applied", str(batch_id)
-    )
-
-    def mark_applied() -> None:
-        _os.makedirs(ledger, exist_ok=True)
-        tmp = marker + ".tmp"
-        with open(tmp, "w"):
-            pass
-        _os.rename(tmp, marker)
-
-    applied = _os.path.exists(marker) or _os.path.exists(legacy)
-    return applied, mark_applied
-
-
-#: retain at most this many applied-batch markers per ledger; Structured
-#: Streaming replays only batches at/after the checkpoint frontier, so
-#: markers far behind it are dead weight (empty files, but at one per
-#: batch per partition they would dominate directory listings eventually)
-_LEDGER_KEEP = 128
-
-
-def _carry_markers(live_dir: str, staging_dir: str, batch_id: int) -> None:
-    """Copy prior batch markers from the live directory into staging and
-    add this batch's marker, so ONE rename commits data + full ledger.
-    Markers are bare files named ``_applied_<id>`` at the directory root
-    (hidden from scans by the underscore prefix)."""
-    prior = []
-    if os.path.isdir(live_dir):
-        prior = [
-            f for f in os.listdir(live_dir) if f.startswith("_applied_")
-        ]
-    keep = sorted(
-        (int(f.rsplit("_", 1)[1]) for f in prior),
-        reverse=True,
-    )[:_LEDGER_KEEP]
-    os.makedirs(staging_dir, exist_ok=True)
-    for bid in keep:
-        with open(os.path.join(staging_dir, f"_applied_{bid}"), "w"):
-            pass
-    with open(os.path.join(staging_dir, f"_applied_{batch_id}"), "w"):
-        pass
-
-
-def additive_merge_committed(
-    delta: DataFrame,
-    target_dir: str,
-    partition_col: str,
-    group_cols: list[str],
-    sum_cols: list[str],
-    batch_id: int,
-) -> None:
-    """ADDITIVE merge with an atomic per-partition commit: existing rows
-    and the delta re-aggregate (counts/sums accumulate, unlike keyed MERGE
-    which replaces rows), and each touched partition directory is swapped
-    in by ONE rename that carries both the merged data and this batch's
-    applied marker — so a replayed batch can never double-count, crash
-    anywhere included.
-
-    Protocol per batch: (1) prune to partitions NOT already carrying this
-    batch's marker; (2) one Spark job writes every such partition's merged
-    result into a staging root; (3) per partition, copy forward prior
-    markers + add this batch's marker into the staging directory, then
-    rename it into place. Crash before a partition's rename leaves that
-    partition untouched and unmarked → replay redoes it; crash after
-    leaves data+marker committed together → replay skips it. The rewrite
-    is O(touched partitions), never O(table), and step 3 is pure
-    filesystem metadata.
-
-    Residual (documented, same as every non-transactional layout): a
-    reader can see partition A new while B is still old, and each swap has
-    the brief no-target blink of ``_swap_in``. Fixing those needs a
-    transactional table format (Delta/Iceberg), where this whole function
-    is ``MERGE`` + txn id.
-
-    Precondition: ``partition_col`` values must be directory-name-safe
-    (the engine's day strings are); ``group_cols`` must contain
-    ``partition_col``.
-    """
-    spark = delta.sparkSession
-    staging_root = target_dir.rstrip("/") + "__staging"
-    if os.path.exists(staging_root):
-        shutil.rmtree(staging_root)
-
-    def _part(root: str, value) -> str:
-        return os.path.join(root, f"{partition_col}={value}")
-
-    def _part_old(value) -> str:
-        # the old copy parks in a SIBLING directory of the table root — a
-        # "day=X__old" dir inside it would be discovered as a phantom
-        # partition value by any concurrent reader (Spark's partition
-        # inference parses every directory component, hidden-prefix or not)
-        return os.path.join(
-            target_dir.rstrip("/") + "__oldparts", f"{partition_col}={value}"
-        )
-
-    def _recover_part(value) -> None:
-        # resolve a partition whose previous swap crashed between renames
-        # (its only copy is the hidden old dir): restore if the live dir
-        # is missing, else the old copy is post-promotion garbage
-        old, live = _part_old(value), _part(target_dir, value)
-        if os.path.exists(old):
-            if os.path.exists(live):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, live)
-
-    marker = f"_applied_{batch_id}"
-    touched = sorted(
-        r[0] for r in delta.select(partition_col).distinct().collect()
-    )  # deterministic commit order: replays resume at the first uncommitted
-    # recovery BEFORE the pruned read below — reading an absent live dir
-    # as "no current rows" would drop prior batches from the merge
-    for v in touched:
-        _recover_part(v)
-    todo = [
-        v
-        for v in touched
-        if not os.path.exists(os.path.join(_part(target_dir, v), marker))
-    ]
-    if not todo:
-        return
-    delta_todo = delta.filter(F.col(partition_col).isin(todo))
-    # "current exists" must mean AT LEAST ONE committed partition
-    # directory, not merely the directory inode: a crash between the
-    # first batch's makedirs and its first partition rename leaves an
-    # EMPTY target, and reading that as parquet throws on every replay —
-    # a permanent wedge the bare-exists check caused.
-    has_current = os.path.isdir(target_dir) and any(
-        e.startswith(f"{partition_col}=") for e in os.listdir(target_dir)
-    )
-    if has_current:
-        # partition-pruned read: only the todo directories are scanned.
-        # NOTE a partially-committed prior attempt is handled by the todo
-        # filter, not here — an already-swapped partition's (corrupt to
-        # re-merge) staging output is simply never promoted again.
-        current = spark.read.parquet(target_dir).filter(
-            F.col(partition_col).isin(todo)
-        )
-        merged = current.unionByName(delta_todo)
-    else:
-        merged = delta_todo
-    merged = merged.groupBy(*group_cols).agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    )
-    # one job, all todo partitions; no localCheckpoint needed — staging is
-    # a different path, so the plan never overwrites its own input
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(
-        staging_root
-    )
-    os.makedirs(target_dir, exist_ok=True)
-    for v in todo:
-        live, stage = _part(target_dir, v), _part(staging_root, v)
-        if not os.path.isdir(stage):
-            continue  # empty merged partition: nothing to commit, replay retries
-        _carry_markers(live, stage, batch_id)
-        old = _part_old(v)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(live):
-            os.makedirs(os.path.dirname(old), exist_ok=True)
-            os.rename(live, old)
-        os.rename(stage, live)  # THE commit point for this partition
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    shutil.rmtree(staging_root, ignore_errors=True)
-
-
 def append_missing(
     new_rows: DataFrame, target_dir: str, key: str | list[str]
 ) -> None:
@@ -378,80 +192,6 @@ def write_bucketed(
     )
 
 
-def scd2_merge(
-    updates: DataFrame,
-    target_dir: str,
-    key: str,
-    change_cols: list[str],
-    effective_col: str = "effective_from",
-    batch_id: int | None = None,
-) -> None:
-    """Slowly-changing-dimension type-2 merge: history-preserving upsert.
-
-    The target keeps one row per (key, version) with ``effective_from`` /
-    ``effective_to`` / ``is_current``; an update whose ``change_cols``
-    differ from the key's current row CLOSES that row (effective_to :=
-    update's effective_from) and appends the new version. Unchanged keys
-    and non-current history rows pass through untouched — at scale,
-    combine with a partition column the way ``merge_upsert`` does.
-
-    The reference keeps only latest state (ORM upsert); SCD2 is what the
-    same write needs once history must be queryable "as of" any date.
-    Like SQL MERGE, one update row per key per batch — collapse a batch
-    to latest-per-key first (A4) if the feed can repeat keys.
-
-    With ``batch_id`` (streaming replay protection), the applied-batch
-    marker is written into the staging directory BEFORE the swap, so the
-    rename that promotes the merged table promotes the marker with it —
-    data and "applied" commit atomically; there is no window where the
-    merge landed but the ledger didn't (see ``batch_ledger``).
-    """
-    spark = updates.sparkSession
-    _recover_swap(target_dir)
-
-    def _commit(df: DataFrame) -> None:
-        staging = target_dir.rstrip("/") + "__staging"
-        df.write.mode("overwrite").parquet(staging)
-        # the swap replaces the whole directory, so the ledger must ride
-        # along: carry prior markers forward even on a non-ledgered call
-        # (mixed ledgered/ad-hoc use must not amnesia the ledger)
-        live_ledger = os.path.join(target_dir, "_applied")
-        stage_ledger = os.path.join(staging, "_applied")
-        if os.path.isdir(live_ledger):
-            os.makedirs(stage_ledger, exist_ok=True)
-            # bounded carry (same _LEDGER_KEEP rationale as the additive
-            # sink): streaming replays only reach back to the checkpoint
-            # frontier, so carrying every historical marker forward would
-            # recreate O(n) files per batch — O(n²) over a stream's life
-            names = os.listdir(live_ledger)
-            numeric = sorted(
-                (int(f) for f in names if f.isdigit()), reverse=True
-            )[:_LEDGER_KEEP]
-            keep = {str(b) for b in numeric} | {
-                f for f in names if not f.isdigit()
-            }
-            for f in keep:
-                with open(os.path.join(stage_ledger, f), "w"):
-                    pass
-        if batch_id is not None:
-            os.makedirs(stage_ledger, exist_ok=True)
-            with open(os.path.join(stage_ledger, str(batch_id)), "w"):
-                pass
-        _swap_in(staging, target_dir)
-
-    merged = scd2_apply(
-        spark.read.parquet(target_dir) if os.path.exists(target_dir) else None,
-        updates,
-        key,
-        change_cols,
-        effective_col,
-    )
-    if os.path.exists(target_dir):
-        # the merged plan reads the path it replaces: cut lineage first
-        merged = merged.localCheckpoint(eager=True)
-    _commit(merged)
-
-
 def scd2_apply(
     current: DataFrame | None,
     updates: DataFrame,
@@ -460,8 +200,8 @@ def scd2_apply(
     effective_col: str = "effective_from",
 ) -> DataFrame:
     """The SCD2 state transition as a pure transform: (current table or
-    None, one-row-per-key updates) → next table. Shared by the staged-swap
-    sink above and the txn-format sink (``txn.scd2_merge_txn``)."""
+    None, one-row-per-key updates) → next table; ``txn.scd2_merge_txn``
+    commits it as one manifest."""
     upd = updates.select(
         F.col(key),
         *[F.col(c) for c in change_cols],
@@ -583,32 +323,6 @@ def compact_small_files(
             ]
         return out
 
-    def _carry_ledgers(staging: str) -> None:
-        """The applied-batch ledgers live INSIDE the table directory (see
-        ``batch_ledger``), so a whole-directory swap that doesn't copy
-        them would amnesia every applied batch and re-enable replay
-        double-application — compaction must carry both ledger kinds."""
-        live_ledger = os.path.join(target_dir, "_applied")
-        if os.path.isdir(live_ledger):
-            stage_ledger = os.path.join(staging, "_applied")
-            os.makedirs(stage_ledger, exist_ok=True)
-            for f in os.listdir(live_ledger):
-                with open(os.path.join(stage_ledger, f), "w"):
-                    pass
-        if partition_col:
-            for e in os.listdir(target_dir):
-                if not e.startswith(f"{partition_col}="):
-                    continue
-                part_dir = os.path.join(target_dir, e)
-                if not os.path.isdir(part_dir):
-                    continue
-                for f in os.listdir(part_dir):
-                    if f.startswith("_applied_"):
-                        dst = os.path.join(staging, e)
-                        os.makedirs(dst, exist_ok=True)
-                        with open(os.path.join(dst, f), "w"):
-                            pass
-
     _recover_swap(target_dir)
     before = _data_files(target_dir)
     total = sum(os.path.getsize(f) for f in before)
@@ -636,7 +350,6 @@ def compact_small_files(
         )
     else:
         df.repartition(n_files).write.mode("overwrite").parquet(staging)
-    _carry_ledgers(staging)
     _swap_in(staging, target_dir)
     return {"files_before": len(before), "files_after": len(_data_files(target_dir))}
 

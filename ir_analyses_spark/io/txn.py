@@ -1,14 +1,15 @@
 """Transaction-log table format: snapshot-isolated parquet tables.
 
-Closes the gap the bare-directory sinks in ``io/sinks.py`` document as
-their residual (VERDICT r3 "what's missing" item 1): a staged-swap layout
-has a brief no-target blink between renames, a concurrent reader can see
-partition A new while B is still old, and the applied-batch marker of a
-multi-partition additive merge commits per partition, not per batch. The
-reference never faces any of this because PostgreSQL gives it MVCC
-transactions (reference utils/service/unitofwork.py:120-143); this module
-is the storage-level equivalent for a Spark engine on plain parquet — the
-same design Delta Lake / Iceberg use, cut down to what the engine needs:
+The bare-directory sinks in ``io/sinks.py`` commit by staged directory
+swap, which has a brief no-target blink between renames and no way to
+commit an applied-batch ledger atomically with a multi-partition write.
+Every sink that needs exactly-once replay therefore commits here: the
+streaming rollup and SCD2 sinks (``streaming/pipeline.py``) and the
+``txn_table`` stream sink. The reference never faces any of this because
+PostgreSQL gives it MVCC transactions (reference
+utils/service/unitofwork.py:120-143); this module is the storage-level
+equivalent for a Spark engine on plain parquet — the same design Delta
+Lake / Iceberg use, cut down to what the engine needs:
 
 - A table is a directory. Data files live under ``data/<commit-uuid>/``
   and are IMMUTABLE once written; readers never list directories.
@@ -28,16 +29,19 @@ same design Delta Lake / Iceberg use, cut down to what the engine needs:
   ``v``'s files correctly regardless of later commits, until a ``vacuum``
   retires versions older than its retention window (same contract as
   Delta VACUUM).
-- The additive merge records ``batch_id`` in the manifest itself, so
+- The ledgered writers (``additive_merge``, ``transform_commit`` and so
+  ``scd2_merge_txn``) record ``batch_id`` in the manifest itself, so
   "data applied" and "batch applied" are ONE filesystem operation across
   ALL touched partitions — a replayed streaming batch can never
-  double-count, and no reader can observe half a batch.
+  double-count, and no reader can observe half a batch. ``compact`` and
+  ``restore`` carry the ledger forward, so maintenance never re-enables
+  a replay.
 
 Scale note (100 TB): each manifest is a FULL file listing, so resolving a
 snapshot costs one small-file read — no log replay. At very large file
 counts you would shard the listing and checkpoint like Delta does; at
 this engine's file sizes (compaction keeps files near 128 MB,
-``compact_small_files``) a manifest stays in the low MBs up to ~10⁵ files
+``compact``) a manifest stays in the low MBs up to ~10⁵ files
 per table. Partition pruning happens at the MANIFEST level: a pruned read
 hands Spark only the matching files, so there is no directory listing at
 all — cheaper than Hive-style discovery, and the reason
@@ -62,7 +66,7 @@ _LOG_DIR = "_txnlog"
 _DATA_DIR = "data"
 #: applied-batch ids retained in the manifest ledger; Structured Streaming
 #: replays only batches at/after the checkpoint frontier, so a bounded
-#: recent window is sufficient (same rationale as sinks._LEDGER_KEEP)
+#: recent window is sufficient and the manifest stays O(1) in stream age
 _LEDGER_KEEP = 128
 
 
@@ -768,13 +772,14 @@ def additive_merge(
     batch_id: int,
 ) -> Snapshot:
     """Additive (re-aggregating) merge with exactly-once batch semantics:
-    the successor of ``sinks.additive_merge_committed`` without its
-    residuals. ``batch_id`` membership in the manifest ledger IS the
-    applied test, and the ledger travels in the same manifest link as the
-    data — so across ALL touched partitions, "merged" and "marked" are
-    one atomic operation. A replayed batch short-circuits to a no-op; a
-    crash anywhere before the link leaves the prior version fully intact;
-    a concurrent reader sees the whole batch or none of it."""
+    counts/sums accumulate, unlike keyed MERGE which replaces rows (the
+    commit of ``streaming.pipeline.foreach_batch_rollup``). ``batch_id``
+    membership in the manifest ledger IS the applied test, and the ledger
+    travels in the same manifest link as the data — so across ALL touched
+    partitions, "merged" and "marked" are one atomic operation. A replayed
+    batch short-circuits to a no-op; a crash anywhere before the link
+    leaves the prior version fully intact; a concurrent reader sees the
+    whole batch or none of it."""
     spark = delta.sparkSession
 
     def build(snap: Snapshot) -> dict | None:
@@ -891,10 +896,19 @@ def scd2_merge_txn(
     effective_col: str = "effective_from",
     batch_id: int | None = None,
 ) -> Snapshot:
-    """``sinks.scd2_merge`` on the txn format: same close-and-version
-    transform (shared ``sinks.scd2_apply``), but the versioned history
-    commits as one manifest — readers never see a half-swapped dimension,
-    and a replayed ``batch_id`` is a no-op at the same table version."""
+    """Slowly-changing-dimension type-2 merge: history-preserving upsert.
+
+    The table keeps one row per (key, version) with ``effective_from`` /
+    ``effective_to`` / ``is_current``; an update whose ``change_cols``
+    differ (null-safe) from the key's current row CLOSES that row
+    (effective_to := update's effective_from) and appends the new
+    version. Unchanged keys and history rows pass through untouched. Like
+    SQL MERGE, one update row per key per batch — collapse a batch to
+    latest-per-key first (A4) if the feed can repeat keys.
+
+    The transform is ``sinks.scd2_apply``; the versioned history commits
+    as one manifest, so readers never see a half-written dimension, and a
+    replayed ``batch_id`` is a no-op at the same table version."""
     from .sinks import scd2_apply
 
     return transform_commit(

@@ -12,12 +12,12 @@ Design notes for scale:
   ``txn_table`` sink — starts through :func:`run_available_now`: one
   availableNow trigger, one timeout, one checkpoint/staging cleanup and
   one state-sizing policy derived from the staged input's bytes;
-- sinks go through ``foreachBatch`` + idempotent MERGE so replays after
-  failure don't duplicate (exactly-once at the table level for keyed
-  MERGE; the ADDITIVE rollup and SCD2 sinks commit each batch's applied
-  marker in the same rename as its data — ``io.sinks.batch_ledger`` /
-  ``additive_merge_committed`` — so replays skip with no
-  merge-vs-marker crash window).
+- sinks go through ``foreachBatch``, so a replay after failure never
+  duplicates: the keyed upsert sink is idempotent by construction
+  (``io.sinks.merge_upsert``); the ADDITIVE rollup and SCD2 sinks commit
+  on the transaction-log format (``io/txn.py``), where the batch id rides
+  in the same manifest as the data — a replayed batch is a no-op at the
+  same table version, with no merge-vs-marker crash window.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ..io import txn
 from ..io.sources import events_ts_unit, load_table, narrow_ns_to_ts
 from ..schemas import EVENTS_TS_NANOS_SCHEMA, TESTDATA_SCHEMAS
 
@@ -276,28 +277,23 @@ def foreach_batch_upsert(
 
 def foreach_batch_scd2(
     df: DataFrame,
-    target_dir: str,
+    table: str,
     key: str,
     change_cols: list[str],
     effective_col: str = "effective_from",
 ):
     """Streaming CDC → SCD2: every micro-batch of change events versions
-    the dimension table (close-and-append via ``io.sinks.scd2_merge``).
-    The batch is first collapsed to its latest row per key (SCD2's
-    one-update-per-key contract; intermediate same-batch flips are
-    sub-batch-granularity history by definition). Replay needs the same
-    batch-id ledger as the rollup sink: re-merging only the LAST batch is
-    a no-op (values already current), but a replay from batch 0 would see
+    the dimension table (close-and-append via ``io.txn.scd2_merge_txn``;
+    read it with ``txn.read``). The batch is first collapsed to its latest
+    row per key (SCD2's one-update-per-key contract; intermediate
+    same-batch flips are sub-batch-granularity history by definition).
+    Replay needs the batch-id ledger: re-merging only the LAST batch is a
+    no-op (values already current), but a replay from batch 0 would see
     older values as "changes" against the final state and append stale
-    versions — time only moves forward through the ledger. The marker
-    commits INSIDE scd2_merge's staged swap (same rename as the data), so
-    a crash can never leave a merged-but-unmarked batch to re-apply."""
-    from ..io.sinks import batch_ledger, scd2_merge
+    versions. The batch id commits in the same manifest as the versioned
+    table, so a replayed batch is a no-op at the same table version."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        applied, _ = batch_ledger(target_dir, batch_id)
-        if applied:
-            return
         # total order: effective date desc, then the change columns desc —
         # two same-key rows with equal effective_from (common at date
         # granularity) must pick the SAME survivor on every replay, or the
@@ -311,14 +307,14 @@ def foreach_batch_scd2(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        scd2_merge(
-            latest, target_dir, key, change_cols, effective_col,
+        txn.scd2_merge_txn(
+            latest, table, key, change_cols, effective_col,
             batch_id=batch_id,
         )
 
     return run_available_now(
         df.writeStream.foreachBatch(_apply),
-        checkpoint=f"{target_dir}__checkpoint",
+        checkpoint=f"{table}__checkpoint",
     )
 
 
@@ -345,53 +341,28 @@ def rollup_delta(events: DataFrame) -> DataFrame:
     )
 
 
-def foreach_batch_rollup(df: DataFrame, target_dir: str):
+def foreach_batch_rollup(df: DataFrame, table: str):
     """Streaming sink that keeps the rollup current: every micro-batch
     folds its partial aggregate into the rollup table. State lives in the
     table itself — no streaming-state store — so the rollup survives
-    restarts and is queryable mid-stream at scan speed.
+    restarts and is queryable mid-stream at scan speed; read it with
+    ``txn.read``.
 
     Addition is NOT naturally idempotent (a replayed batch would
-    double-count), so each touched day directory commits its merged data
-    and an applied-batch marker in ONE rename
-    (``io.sinks.additive_merge_committed``): a replayed batch skips every
-    day it already committed, crash-anywhere included — the transactionless
-    equivalent of Delta recording the txn id inside the commit. The
-    rewrite stays pruned to the days the batch touches, never O(table)."""
+    double-count), so each batch commits through ``io.txn.additive_merge``:
+    ONE manifest publication carries the merged days and the batch id, so
+    a replayed batch is a no-op at the same table version, crash-anywhere
+    included, and a concurrent reader sees the whole batch or none of it.
+    The rewrite stays pruned to the days the batch touches, never
+    O(table)."""
     return run_available_now(
-        df.writeStream.foreachBatch(_rollup_batch(target_dir)),
-        checkpoint=f"{target_dir}__checkpoint",
+        df.writeStream.foreachBatch(_rollup_batch(table)),
+        checkpoint=f"{table}__checkpoint",
     )
 
 
-def _rollup_batch(target_dir: str):
+def _rollup_batch(table: str):
     """foreachBatch function of :func:`foreach_batch_rollup`."""
-    from ..io.sinks import additive_merge_committed
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        additive_merge_committed(
-            rollup_delta(batch_df),
-            target_dir,
-            partition_col="day",
-            group_cols=["day", "event_type"],
-            sum_cols=["n_events", "value_micros"],
-            batch_id=batch_id,
-        )
-
-    return _apply
-
-
-def foreach_batch_rollup_txn(df: DataFrame, table: str):
-    """``foreach_batch_rollup`` on the transaction-log table format
-    (``io/txn.py``): same incremental rollup, but the batch commits as ONE
-    manifest publication with the batch id in the manifest's ledger — so
-    beyond the directory layout's guarantees, concurrent readers get
-    snapshot isolation (never half a batch, never a no-target blink) and
-    replay protection is atomic across ALL touched days, not per-day.
-    This is the Delta-txn-id pattern the bare-directory sink documents as
-    its remaining residual; read the table with ``txn.read``."""
-    from ..io import txn
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         txn.additive_merge(
             rollup_delta(batch_df),
@@ -402,9 +373,7 @@ def foreach_batch_rollup_txn(df: DataFrame, table: str):
             batch_id=batch_id,
         )
 
-    return run_available_now(
-        df.writeStream.foreachBatch(_apply), checkpoint=f"{table}__checkpoint"
-    )
+    return _apply
 
 
 # ---------------------------------------------------------------------------
@@ -772,7 +741,7 @@ def stream_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             staged=(src,),
         )
-        out = spark.read.parquet(target).select(
+        out = txn.read(spark, target).select(
             "day", "event_type", "n_events", "value_micros"
         )
         # materialize before the temp dir vanishes

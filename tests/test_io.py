@@ -16,7 +16,7 @@ import codecs
 import pytest
 from pyspark.sql import functions as F
 
-from ir_analyses_spark.io import sinks, sources
+from ir_analyses_spark.io import sinks, sources, txn
 from ir_analyses_spark.schemas import RAW_JP_COLUMNS
 
 HEADER = "\t".join(RAW_JP_COLUMNS)
@@ -29,6 +29,20 @@ ROW2 = "\t".join(
      "提出日時点", "その他", "時点", "－", "－", "テスト株式会社"]
 )
 CONTENT = f"{HEADER}\n{ROW1}\n{ROW2}\n"
+
+
+def _scd2_rows(df):
+    """SCD2 rows as sorted (key, city, from, to, is_current) string tuples."""
+    return sorted(
+        (
+            r["code"],
+            r["city"],
+            str(r["effective_from"]),
+            str(r["effective_to"]),
+            r["is_current"],
+        )
+        for r in df.collect()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -193,82 +207,12 @@ def test_swap_in_crash_window_leaves_valid_copy(spark, tmp_path, monkeypatch):
     assert not _os.path.exists(staging)
 
 
-def test_additive_merge_crash_mid_commit_no_double_count(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r3 item 4: the additive sink's merge and applied-marker
-    commit in the SAME rename per partition, so a crash anywhere —
-    including between two partitions' commits — can never double-count a
-    replayed batch. Kill batch 1 after its first partition committed,
-    replay it, and require exact totals."""
-    import os as _os
-
-    import pytest as _pytest
-
-    target = str(tmp_path / "rollup")
-    schema = "day string, event_type string, n_events long, value_micros long"
-    d0 = spark.createDataFrame(
-        [("2024-01-01", "a", 1, 10), ("2024-01-02", "a", 2, 20)], schema
-    )
-    sinks.additive_merge_committed(
-        d0, target, "day", ["day", "event_type"],
-        ["n_events", "value_micros"], batch_id=0,
-    )
-
-    d1 = spark.createDataFrame(
-        [("2024-01-01", "a", 5, 50), ("2024-01-02", "a", 7, 70)], schema
-    )
-    real_rename = _os.rename
-
-    def crashy(src, dst):
-        # commit order is sorted, so day=01 promotes first; crash on the
-        # promotion of day=02 (staging → live)
-        if dst.endswith("day=2024-01-02") and "__staging" in src:
-            raise OSError("simulated crash mid-commit")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(sinks.os, "rename", crashy)
-    with _pytest.raises(OSError, match="mid-commit"):
-        sinks.additive_merge_committed(
-            d1, target, "day", ["day", "event_type"],
-            ["n_events", "value_micros"], batch_id=1,
-        )
-    monkeypatch.setattr(sinks.os, "rename", real_rename)
-
-    # intermediate state: day=01 committed WITH its marker in one rename;
-    # day=02's crash hit between its two renames, so its (unmarked) batch-0
-    # data survives at __old awaiting recovery — never half-applied
-    assert _os.path.exists(
-        _os.path.join(target, "day=2024-01-01", "_applied_1")
-    )
-    day2_old = _os.path.join(target + "__oldparts", "day=2024-01-02")
-    assert _os.path.exists(day2_old)
-    assert not _os.path.exists(_os.path.join(day2_old, "_applied_1"))
-    mid = {
-        (r["day"], r["event_type"]): (r["n_events"], r["value_micros"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert mid[("2024-01-01", "a")] == (6, 60)
-
-    # replay of batch 1: day=01 skipped (marker), day=02 applied once
-    for _ in range(2):  # second replay must be a full no-op
-        sinks.additive_merge_committed(
-            d1, target, "day", ["day", "event_type"],
-            ["n_events", "value_micros"], batch_id=1,
-        )
-        got = {
-            (r["day"], r["event_type"]): (r["n_events"], r["value_micros"])
-            for r in spark.read.parquet(target).collect()
-        }
-        assert got[("2024-01-01", "a")] == (6, 60)
-        assert got[("2024-01-02", "a")] == (9, 90)
-
-
 def test_scd2_batch_marker_commits_with_swap(spark, tmp_path, monkeypatch):
-    """The SCD2 sink's applied marker rides the staged swap: a crash
-    before the swap leaves the batch unmarked (replay applies it exactly
-    once); after the swap, data and marker are both present (replay
-    skips). No state exists where the merge landed but the ledger didn't."""
+    """The SCD2 sink's applied marker rides the manifest that publishes
+    the versioned table: a crash before the publish leaves the table
+    unchanged AND the batch unmarked (replay applies it exactly once);
+    after the publish, data and marker are both present (replay skips).
+    No state exists where the merge landed but the ledger didn't."""
     import datetime as _dt
 
     import pytest as _pytest
@@ -278,36 +222,44 @@ def test_scd2_batch_marker_commits_with_swap(spark, tmp_path, monkeypatch):
     b0 = spark.createDataFrame(
         [("K1", "A", _dt.date(2023, 1, 1))], schema
     )
-    sinks.scd2_merge(b0, target, key="code", change_cols=["city"], batch_id=0)
-    assert sinks.batch_ledger(target, 0)[0]
+    txn.scd2_merge_txn(b0, target, key="code", change_cols=["city"], batch_id=0)
+    assert 0 in txn.snapshot(target).applied_batches
+    v0 = txn.snapshot(target).version
 
     b1 = spark.createDataFrame(
         [("K1", "B", _dt.date(2023, 2, 1))], schema
     )
 
-    def boom(staging, target_dir):
-        raise OSError("simulated crash before swap")
+    def boom(table, manifest):
+        raise OSError("simulated crash before publish")
 
-    monkeypatch.setattr(sinks, "_swap_in", boom)
-    with _pytest.raises(OSError, match="before swap"):
-        sinks.scd2_merge(
+    monkeypatch.setattr(txn, "_publish", boom)
+    with _pytest.raises(OSError, match="before publish"):
+        txn.scd2_merge_txn(
             b1, target, key="code", change_cols=["city"], batch_id=1
         )
-    monkeypatch.undo()  # restore the real _swap_in for the replay below
+    monkeypatch.undo()  # restore the real _publish for the replay below
 
     # nothing applied, nothing marked: the ledger and table agree
-    assert not sinks.batch_ledger(target, 1)[0]
-    assert spark.read.parquet(target).count() == 1
+    snap = txn.snapshot(target)
+    assert snap.version == v0
+    assert 1 not in snap.applied_batches
+    assert _scd2_rows(txn.read(spark, target)) == [
+        ("K1", "A", "2023-01-01", "None", True)
+    ]
 
     # replay applies exactly once; marker 0 carried forward
-    sinks.scd2_merge(b1, target, key="code", change_cols=["city"], batch_id=1)
-    assert sinks.batch_ledger(target, 0)[0]
-    assert sinks.batch_ledger(target, 1)[0]
-    rows = {
-        (r["city"], r["is_current"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert rows == {("A", False), ("B", True)}
+    for _ in range(2):  # the second replay is a no-op at the same version
+        txn.scd2_merge_txn(
+            b1, target, key="code", change_cols=["city"], batch_id=1
+        )
+        snap = txn.snapshot(target)
+        assert snap.version == v0 + 1
+        assert {0, 1} <= set(snap.applied_batches)
+        assert _scd2_rows(txn.read(spark, target)) == [
+            ("K1", "A", "2023-01-01", "2023-02-01", False),
+            ("K1", "B", "2023-02-01", "None", True),
+        ]
 
 
 def test_append_missing_is_insert_only(spark, tmp_path):
@@ -395,7 +347,7 @@ def test_scd2_merge_versions_history(spark, tmp_path):
         [("E1", "Tokyo", day("2023-01-01")), ("E2", "Osaka", day("2023-01-01"))],
         "code string, city string, effective_from date",
     )
-    sinks.scd2_merge(b1, target, key="code", change_cols=["city"])
+    txn.scd2_merge_txn(b1, target, key="code", change_cols=["city"])
     # E1 moves, E2 unchanged, E3 appears
     b2 = spark.createDataFrame(
         [
@@ -405,18 +357,8 @@ def test_scd2_merge_versions_history(spark, tmp_path):
         ],
         "code string, city string, effective_from date",
     )
-    sinks.scd2_merge(b2, target, key="code", change_cols=["city"])
-    rows = sorted(
-        (
-            r["code"],
-            r["city"],
-            str(r["effective_from"]),
-            str(r["effective_to"]),
-            r["is_current"],
-        )
-        for r in spark.read.parquet(target).collect()
-    )
-    assert rows == [
+    txn.scd2_merge_txn(b2, target, key="code", change_cols=["city"])
+    assert _scd2_rows(txn.read(spark, target)) == [
         ("E1", "Kyoto", "2023-06-01", "None", True),
         ("E1", "Tokyo", "2023-01-01", "2023-06-01", False),
         ("E2", "Osaka", "2023-01-01", "None", True),
@@ -427,10 +369,10 @@ def test_scd2_merge_versions_history(spark, tmp_path):
         [("E1", "Sendai", day("2024-01-01"))],
         "code string, city string, effective_from date",
     )
-    sinks.scd2_merge(b3, target, key="code", change_cols=["city"])
+    txn.scd2_merge_txn(b3, target, key="code", change_cols=["city"])
     e1 = sorted(
         (r["city"], str(r["effective_to"]), r["is_current"])
-        for r in spark.read.parquet(target).filter(F.col("code") == "E1").collect()
+        for r in txn.read(spark, target).filter(F.col("code") == "E1").collect()
     )
     assert e1 == [
         ("Kyoto", "2024-01-01", False),
@@ -450,14 +392,14 @@ def test_scd2_point_in_time_join(spark, tmp_path):
     def day(s):
         return dt.date.fromisoformat(s)
 
-    sinks.scd2_merge(
+    txn.scd2_merge_txn(
         spark.createDataFrame(
             [("E1", "Tokyo", day("2023-01-01"))],
             "code string, city string, effective_from date",
         ),
         target, key="code", change_cols=["city"],
     )
-    sinks.scd2_merge(
+    txn.scd2_merge_txn(
         spark.createDataFrame(
             [("E1", "Kyoto", day("2023-06-01"))],
             "code string, city string, effective_from date",
@@ -474,7 +416,7 @@ def test_scd2_point_in_time_join(spark, tmp_path):
         ],
         "fact_id long, code string, fact_date date",
     )
-    dim = spark.read.parquet(target)
+    dim = txn.read(spark, target)
     got = {
         r["fact_id"]: r["city"]
         for r in sinks.scd2_point_in_time_join(
@@ -495,15 +437,15 @@ def test_scd2_merge_null_transitions(spark, tmp_path):
         [("E1", None, d1), ("E2", None, d1), ("E3", "A", d1)],
         "code string, city string, effective_from date",
     )
-    sinks.scd2_merge(b1, target, key="code", change_cols=["city"])
+    txn.scd2_merge_txn(b1, target, key="code", change_cols=["city"])
     b2 = spark.createDataFrame(
         [("E1", "X", d2), ("E2", None, d2), ("E3", None, d2)],
         "code string, city string, effective_from date",
     )
-    sinks.scd2_merge(b2, target, key="code", change_cols=["city"])
+    txn.scd2_merge_txn(b2, target, key="code", change_cols=["city"])
     versions = {
         r["code"]: n
-        for r in spark.read.parquet(target)
+        for r in txn.read(spark, target)
         .groupBy("code")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
@@ -512,7 +454,7 @@ def test_scd2_merge_null_transitions(spark, tmp_path):
     assert versions == {"E1": 2, "E2": 1, "E3": 2}
     cur = {
         r["code"]: r["city"]
-        for r in spark.read.parquet(target).filter("is_current").collect()
+        for r in txn.read(spark, target).filter("is_current").collect()
     }
     assert cur == {"E1": "X", "E2": None, "E3": None}
 
@@ -540,7 +482,7 @@ def test_compact_splits_hot_partition(spark, tmp_path):
 
 def test_scd2_merge_random_batches_match_model(spark, tmp_path):
     """Randomized differential: a fixed-seed sequence of update batches
-    through scd2_merge must equal an independent sequential Python model
+    through scd2_merge_txn must equal an independent sequential Python model
     (the same N-cases-one-job pattern as the parser property tests)."""
     import datetime as dt
     import random
@@ -570,13 +512,10 @@ def test_scd2_merge_random_batches_match_model(spark, tmp_path):
             [(k, c, day) for k, c in batch],
             "code string, city string, effective_from date",
         )
-        sinks.scd2_merge(df, target, key="code", change_cols=["city"])
+        txn.scd2_merge_txn(df, target, key="code", change_cols=["city"])
         model_apply(batch, day)
 
-    got = sorted(
-        (r["code"], r["city"], str(r["effective_from"]), str(r["effective_to"]), r["is_current"])
-        for r in spark.read.parquet(target).collect()
-    )
+    got = _scd2_rows(txn.read(spark, target))
     want = sorted(
         (k, v[0], str(v[1]), str(v[2]), v[3])
         for k, versions in model.items()
@@ -653,71 +592,24 @@ def test_compact_small_files_partitioned(spark, tmp_path):
     assert got.filter(F.col("fy") == "0").count() == 200
 
 
-def test_compact_carries_applied_ledgers_through_swap(spark, tmp_path):
-    """The applied-batch ledgers live INSIDE the table directory, so
-    compaction's whole-directory swap must carry them — otherwise a
-    replayed batch after maintenance double-counts (found by review)."""
-    target = str(tmp_path / "rollup")
-    schema = "day string, event_type string, n_events long, value_micros long"
-    d0 = spark.createDataFrame([("2024-01-01", "a", 1, 10)], schema)
-    d1 = spark.createDataFrame([("2024-01-01", "a", 5, 50)], schema)
-    args = (target, "day", ["day", "event_type"], ["n_events", "value_micros"])
-    sinks.additive_merge_committed(d0, *args, batch_id=0)
-    sinks.additive_merge_committed(d1, *args, batch_id=1)
-    sinks.compact_small_files(spark, target, partition_col="day")
-    # replay both batches after compaction: markers must have survived
-    sinks.additive_merge_committed(d0, *args, batch_id=0)
-    sinks.additive_merge_committed(d1, *args, batch_id=1)
-    rows = spark.read.parquet(target).collect()
-    assert [(r.n_events, r.value_micros) for r in rows] == [(6, 60)]
-    # scd2-style directory ledger survives the unpartitioned swap too
-    dim = str(tmp_path / "dim")
-    import datetime as _dt
-
-    upd = spark.createDataFrame(
-        [(1, "a", _dt.date(2024, 1, 1))], ["user_id", "state", "effective_from"]
-    )
-    sinks.scd2_merge(upd, dim, key="user_id", change_cols=["state"], batch_id=7)
-    sinks.compact_small_files(spark, dim)
-    applied, _mark = sinks.batch_ledger(dim, 7)
-    assert applied
-
-
 def test_additive_merge_replay_survives_empty_target_dir(spark, tmp_path):
-    """A crash between the first batch's makedirs and its first partition
-    rename leaves an EMPTY target directory; the replay must treat that
-    as 'no current rows' instead of wedging on a parquet read of an empty
-    dir (found by review)."""
+    """A writer killed before its first publish leaves an EMPTY table
+    directory; the next batch and its replay must treat that as 'no
+    table' instead of failing on a parquet read of an empty dir."""
     import os as _os
 
     target = str(tmp_path / "rollup")
     _os.makedirs(target)  # the post-crash remnant
     schema = "day string, event_type string, n_events long, value_micros long"
     d0 = spark.createDataFrame([("2024-01-01", "a", 1, 10)], schema)
-    sinks.additive_merge_committed(
-        d0, target, "day", ["day", "event_type"],
-        ["n_events", "value_micros"], batch_id=0,
-    )
-    rows = spark.read.parquet(target).collect()
+    for _ in range(2):  # first apply, then a replay of the same batch
+        txn.additive_merge(
+            d0, target, "day", ["day", "event_type"],
+            ["n_events", "value_micros"], batch_id=0,
+        )
+    rows = txn.read(spark, target).collect()
     assert [(r.n_events, r.value_micros) for r in rows] == [(1, 10)]
-
-
-def test_batch_ledger_honors_legacy_sibling_markers(tmp_path):
-    """Tables written before the ledger moved inside the table directory
-    keep markers at <target>__applied; they must still count as applied
-    after an upgrade (found by review)."""
-    import os as _os
-
-    target = str(tmp_path / "t")
-    _os.makedirs(target)
-    legacy = target + "__applied"
-    _os.makedirs(legacy)
-    with open(_os.path.join(legacy, "42"), "w"):
-        pass
-    applied, _mark = sinks.batch_ledger(target, 42)
-    assert applied
-    applied, _mark = sinks.batch_ledger(target, 43)
-    assert not applied
+    assert txn.snapshot(target).version == 1
 
 
 def test_zorder_layout_bounds_both_columns_per_file(spark, tmp_path):

@@ -124,6 +124,49 @@ def test_additive_merge_exactly_once_replay_and_atomic_ledger(spark, tmp_path):
         assert 1 in json.load(fh)["applied_batches"]
 
 
+def test_replay_after_compact_is_noop_at_same_version(spark, tmp_path):
+    """Maintenance must not forget applied batches: ``compact`` rewrites
+    every file, so its manifest has to carry the ledger forward, or a
+    replayed batch after compaction would double-count (additive) or
+    append stale versions (SCD2)."""
+    import datetime
+
+    rollup = str(tmp_path / "rollup")
+    d0 = _mk(spark, [("2024-01-01", "a", 1)], cols=("day", "k", "v"))
+    d1 = _mk(spark, [("2024-01-01", "a", 5)], cols=("day", "k", "v"))
+    txn.additive_merge(d0, rollup, "day", ["day", "k"], ["v"], batch_id=0)
+    txn.additive_merge(d1, rollup, "day", ["day", "k"], ["v"], batch_id=1)
+    txn.compact(spark, rollup)
+    v = txn.snapshot(rollup).version
+    assert txn.history(rollup)[-1]["operation"] == "compact"
+    txn.additive_merge(d0, rollup, "day", ["day", "k"], ["v"], batch_id=0)
+    txn.additive_merge(d1, rollup, "day", ["day", "k"], ["v"], batch_id=1)
+    assert txn.snapshot(rollup).version == v
+    assert _rows(txn.read(spark, rollup)) == [("2024-01-01", "a", 6)]
+
+    dim = str(tmp_path / "dim")
+    b7 = spark.createDataFrame(
+        [(1, "a", datetime.date(2024, 1, 1))],
+        ["user_id", "state", "effective_from"],
+    )
+    b8 = spark.createDataFrame(
+        [(1, "b", datetime.date(2024, 2, 1))],
+        ["user_id", "state", "effective_from"],
+    )
+    txn.scd2_merge_txn(b7, dim, key="user_id", change_cols=["state"], batch_id=7)
+    txn.scd2_merge_txn(b8, dim, key="user_id", change_cols=["state"], batch_id=8)
+    txn.compact(spark, dim)
+    v = txn.snapshot(dim).version
+    want = _rows(txn.read(spark, dim))
+    # replaying batch 7 against the final state would close "b" and
+    # re-append "a" as a new version if the ledger were lost
+    txn.scd2_merge_txn(b7, dim, key="user_id", change_cols=["state"], batch_id=7)
+    txn.scd2_merge_txn(b8, dim, key="user_id", change_cols=["state"], batch_id=8)
+    assert txn.snapshot(dim).version == v
+    assert _rows(txn.read(spark, dim)) == want
+    assert len(want) == 2
+
+
 def test_additive_merge_crash_anywhere_never_double_counts(
     spark, tmp_path, monkeypatch
 ):
